@@ -44,11 +44,10 @@ def prepare_artifacts(spark, sf_dir: str) -> dict[str, float]:
     timings["lsh_old_band_index"] = round(time.perf_counter() - t0, 4)
 
     t0 = time.perf_counter()
-    from lakehouse_cdc_spark.plans.llm_queries import _auto_fit
+    from lakehouse_cdc_spark.plans.llm_queries import IVF_FITS, _auto_fit
 
-    # the two min_k configurations the declared queries use
-    _auto_fit(spark, sf_dir, min_k=8, with_block=True)
-    _auto_fit(spark, sf_dir, min_k=32, with_block=True)
+    for fit in IVF_FITS.values():
+        _auto_fit(spark, sf_dir, *fit)
     timings["ivf_auto_fit"] = round(time.perf_counter() - t0, 4)
 
     t0 = time.perf_counter()

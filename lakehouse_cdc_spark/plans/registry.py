@@ -43,7 +43,12 @@ def register(
     bench: bool = False,
     tags: tuple[str, ...] = (),
 ):
-    """Decorator: add ``fn(spark, sf_dir) -> DataFrame`` to REGISTRY."""
+    """Decorator: add ``fn(spark, sf_dir) -> DataFrame`` to REGISTRY.
+    A name can be registered once: a second registration would
+    silently replace the first query (whichever module imports last
+    wins), so it raises ``ValueError`` instead."""
+    if name in REGISTRY:
+        raise ValueError(f"query {name!r} is already registered")
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         REGISTRY[name] = QuerySpec(

@@ -670,8 +670,12 @@ class SnapshotUpsertSink:
         zones: dict | None = None,
         branch: str | None = None,
     ) -> None:
-        """The snapshot commit protocol, shared by every writer
-        (process_batch / gc_tombstones / compact_buckets): manifest
+        """The snapshot commit protocol, shared by every writer —
+        _merge_into_buckets (process_batch's copy-on-write merge,
+        fold_deltas, stage_batch), _append_delta (process_batch's
+        merge-on-read append), compact_buckets, rebucket and
+        gc_tombstones (publish_branch's rebase writes its manifest
+        itself, then moves the pointer via _publish_pointer): manifest
         first, pointer last, both atomically — a crash between the two
         leaves the previous commit fully intact (and is rolled forward
         by ``recover_interrupted_commit``, since the manifest records
@@ -797,11 +801,34 @@ class SnapshotUpsertSink:
         # abs() would overflow)
         return F.pmod(F.hash(*[F.col(k) for k in self.keys]), F.lit(n_buckets))
 
+    def _bucket_paths(self, manifest: dict, buckets=None) -> list[str]:
+        """File dirs of ``buckets`` (default: every bucket) as mapped by
+        ``manifest``; ids the manifest does not map are skipped."""
+        mapped = manifest.get("buckets") or {}
+        ids = [int(b) for b in mapped] if buckets is None else buckets
+        return [self._bucket_path(mapped[str(b)], b) for b in ids if str(b) in mapped]
+
+    def _data_dirs(self, manifest: dict, snapshot: int) -> list[str]:
+        """Every bucket and delta dir of ``snapshot``'s ``manifest``;
+        raises if any of them was expired."""
+        dirs = self._bucket_paths(manifest) + [
+            self._delta_path(s) for s in manifest.get("deltas") or []
+        ]
+        missing = [p for p in dirs if not os.path.isdir(p)]
+        if missing:
+            raise ValueError(
+                f"snapshot {snapshot} is not fully retained: it "
+                f"references expired data dirs {missing}"
+            )
+        return dirs
+
     def state_at(self, spark: SparkSession, snapshot: int) -> DataFrame | None:
-        """Time travel: full state as of any snapshot whose manifest is
-        still retained (Iceberg ``VERSION AS OF`` parity).  Raises if
-        the snapshot's manifest (or a bucket dir it references) was
-        expired."""
+        """Full state incl. delete tombstones (one row per ever-seen
+        key) as of any snapshot whose manifest is still retained —
+        time travel, Iceberg ``VERSION AS OF`` parity — as one
+        multi-path scan over the snapshot's bucket and delta file
+        sets.  Raises if the snapshot's manifest (or a data dir it
+        references) was expired."""
         manifest = self._read_manifest(snapshot)
         if manifest is None:
             # the flat fallback is ONLY for true pre-manifest legacy
@@ -814,25 +841,19 @@ class SnapshotUpsertSink:
                 # pre-manifest flat snapshot (legacy layout)
                 return spark.read.parquet(self._snapshot_path(snapshot))
             raise ValueError(
-                f"snapshot {snapshot} has no retained manifest "
-                f"(expired or never committed)"
+                f"snapshot {snapshot} has no manifest (expired, never "
+                "committed, or a crashed writer's uncommitted dir — run "
+                "recover_interrupted_commit() or roll back to a "
+                "manifest-bearing snapshot)"
             )
-        deltas = manifest.get("deltas") or []
-        if not manifest["buckets"] and not deltas:
+        paths = self._data_dirs(manifest, snapshot)
+        if not paths:
             return None
-        paths = [
-            self._bucket_path(at_snap, int(b))
-            for b, at_snap in manifest["buckets"].items()
-        ] + [self._delta_path(s) for s in deltas]
-        missing = [p for p in paths if not os.path.isdir(p)]
-        if missing:
-            raise ValueError(
-                f"snapshot {snapshot} references expired data dirs: {missing}"
-            )
         df = self._state_reader(spark, manifest.get("schema")).parquet(*paths)
-        if deltas:
+        if manifest.get("deltas"):
             # merge-on-read: deltas hold raw (uncompacted) change rows —
             # compact the union so the contract (one row per key) holds
+            # (the read cost MOR trades for its O(batch) ingest commits)
             df = latest_per_key(df, self.keys, self.order_by)
         return df
 
@@ -1002,35 +1023,21 @@ class SnapshotUpsertSink:
                         "additive: changes(a,c) == changes(a,b) ∪ "
                         "changes(b,c))"
                     )
-                reader = self._state_reader(spark, manifest.get("schema"))
-                new_state = reader.parquet(
-                    *[
-                        self._bucket_path(
-                            int(manifest["buckets"][str(b)]), b
-                        )
-                        for b in rewritten
-                    ]
-                )
-                prev_buckets = (prev_m or {}).get("buckets") or {}
-                if prev_m is not None and prev_m.get(
+                new_state = self._state_reader(
+                    spark, manifest.get("schema")
+                ).parquet(*self._bucket_paths(manifest, rewritten))
+                # partition evolution (rebucket): bucket ids changed
+                # meaning, so the same-id pairing below would treat
+                # relocated rows as new — diff against the ENTIRE
+                # previous state.  Rows are identical across a
+                # rebucket, so the feed stays empty; the one-commit
+                # O(table) diff cost mirrors the rebucket itself.
+                rebucketed = prev_m is not None and prev_m.get(
                     "n_buckets"
-                ) != manifest.get("n_buckets"):
-                    # partition evolution (rebucket): bucket ids changed
-                    # meaning, so the same-id pairing below would treat
-                    # relocated rows as new — diff against the ENTIRE
-                    # previous state.  Rows are identical across a
-                    # rebucket, so the feed stays empty; the one-commit
-                    # O(table) diff cost mirrors the rebucket itself.
-                    old_paths = [
-                        self._bucket_path(at, int(b))
-                        for b, at in prev_buckets.items()
-                    ]
-                else:
-                    old_paths = [
-                        self._bucket_path(prev_buckets[str(b)], b)
-                        for b in rewritten
-                        if str(b) in prev_buckets
-                    ]
+                ) != manifest.get("n_buckets")
+                old_paths = self._bucket_paths(
+                    prev_m or {}, None if rebucketed else rewritten
+                )
                 if not old_paths:
                     batch = new_state  # first commit: everything is new
                 else:
@@ -1092,18 +1099,7 @@ class SnapshotUpsertSink:
                 "(uncommitted/crashed writer data, not a committed snapshot)"
             )
         if manifest is not None:
-            for b, at_snap in manifest["buckets"].items():
-                if not os.path.isdir(self._bucket_path(at_snap, int(b))):
-                    raise ValueError(
-                        f"snapshot {snapshot} is not fully retained "
-                        f"(bucket {b} expired)"
-                    )
-            for s in manifest.get("deltas") or []:
-                if not os.path.isdir(self._delta_path(s)):
-                    raise ValueError(
-                        f"snapshot {snapshot} is not fully retained "
-                        f"(delta {s} expired)"
-                    )
+            self._data_dirs(manifest, snapshot)  # raises if not fully retained
         cur_lineage, committed_batch, cur_snap = self.committed()
         if cur_snap is None:
             # no committed pointer: there is nothing to roll back FROM,
@@ -1874,42 +1870,10 @@ class SnapshotUpsertSink:
             self._release_claim(snap)
 
     def current_state(self, spark: SparkSession) -> DataFrame | None:
-        """Full state incl. delete tombstones (one row per ever-seen key)
-        — one multi-path scan over every bucket's current file set."""
+        """Full state incl. delete tombstones as of the committed
+        snapshot (None before the first commit)."""
         snap = self.committed_snapshot()
-        if snap is None:
-            return None
-        manifest = self._read_manifest(snap)
-        if manifest is None:
-            # same any-manifest guard as state_at: after a rollback_to
-            # onto a crashed writer's uncommitted v=N dir, serving the
-            # flat files would expose partial never-committed state
-            if self._has_any_manifest():
-                raise ValueError(
-                    f"committed snapshot {snap} has no manifest on a "
-                    "manifest-era target (crashed or rolled-back writer); "
-                    "run recover_interrupted_commit() or roll back to a "
-                    "manifest-bearing snapshot"
-                )
-            # pre-manifest layout: whole-snapshot dir
-            return spark.read.parquet(self._snapshot_path(snap))
-        deltas = manifest.get("deltas") or []
-        if not manifest["buckets"] and not deltas:
-            return None
-        paths = [
-            self._bucket_path(at_snap, int(b))
-            for b, at_snap in manifest["buckets"].items()
-        ] + [self._delta_path(s) for s in deltas]
-        # manifest-tracked union schema when available; else mergeSchema
-        # (buckets evolve independently — a batch adding a column only
-        # rewrites ITS buckets, so the state schema is the union of all
-        # live bucket schemas, footer-only cost)
-        df = self._state_reader(spark, manifest.get("schema")).parquet(*paths)
-        if deltas:
-            # merge-on-read: compact base+deltas on the fly (the read
-            # cost MOR trades for its O(batch) ingest commits)
-            df = latest_per_key(df, self.keys, self.order_by)
-        return df
+        return None if snap is None else self.state_at(spark, snap)
 
     def current_table(self, spark: SparkSession) -> DataFrame | None:
         """The user-visible table: tombstones filtered out."""
@@ -1978,23 +1942,31 @@ class SnapshotUpsertSink:
         falls back to the full merge-on-read scan (fold_deltas() first
         to restore pruned lookups), mirroring the read-optimized vs
         real-time query split of Hudi/Iceberg."""
+        match = F.col(col).cast("string") == F.lit(value).cast("string")
+        return self._pruned_lookup(
+            spark,
+            lambda m: self.probe_buckets(spark, col, value, manifest=m),
+            match,
+        )
+
+    def _pruned_lookup(self, spark: SparkSession, candidates, match: Column):
+        """The live rows matching ``match``, read from ONLY the buckets
+        ``candidates(manifest)`` names for the committed manifest —
+        filters and file paths come from one commit.  With MOR deltas
+        outstanding (no pruning metadata covers them) it filters the
+        full merge-on-read state instead."""
         snap = self.committed_snapshot()
         manifest = self._read_manifest(snap)
         if manifest is None or not manifest.get("buckets"):
             return None
-        match = F.col(col).cast("string") == F.lit(value).cast("string")
+        live = F.col(self.op_col) != "d"
         if manifest.get("deltas"):
-            return self.current_table(spark).filter(match)
-        cand = self.probe_buckets(spark, col, value, manifest=manifest)
-        paths = [
-            self._bucket_path(manifest["buckets"][str(b)], b)
-            for b in cand
-            if str(b) in manifest["buckets"]
-        ]
-        if not paths:  # every bucket bloom-cleared: provably no match
-            return self.current_table(spark).filter(F.lit(False))
+            return self.state_at(spark, snap).filter(live & match)
+        paths = self._bucket_paths(manifest, candidates(manifest))
+        if not paths:  # every bucket pruned: provably no match
+            return self.state_at(spark, snap).filter(F.lit(False))
         df = self._state_reader(spark, manifest.get("schema")).parquet(*paths)
-        return df.filter(F.col(self.op_col) != "d").filter(match)
+        return df.filter(live & match)
 
     # -- zone-map-pruned range lookups -------------------------------------
     def zone_probe_buckets(
@@ -2027,23 +1999,12 @@ class SnapshotUpsertSink:
         table.  Pending MOR deltas carry no zones, so the lookup falls
         back to the full merge-on-read scan (fold_deltas() first to
         restore pruning), mirroring lookup()."""
-        snap = self.committed_snapshot()
-        manifest = self._read_manifest(snap)
-        if manifest is None or not manifest.get("buckets"):
-            return None
         match = (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi))
-        if manifest.get("deltas"):
-            return self.current_table(spark).filter(match)
-        cand = self.zone_probe_buckets(col, lo, hi, manifest=manifest)
-        paths = [
-            self._bucket_path(manifest["buckets"][str(b)], b)
-            for b in cand
-            if str(b) in manifest["buckets"]
-        ]
-        if not paths:  # every bucket zone-cleared: provably no match
-            return self.current_table(spark).filter(F.lit(False))
-        df = self._state_reader(spark, manifest.get("schema")).parquet(*paths)
-        return df.filter(F.col(self.op_col) != "d").filter(match)
+        return self._pruned_lookup(
+            spark,
+            lambda m: self.zone_probe_buckets(col, lo, hi, manifest=m),
+            match,
+        )
 
     # -- the foreachBatch body ------------------------------------------
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
@@ -2217,15 +2178,8 @@ class SnapshotUpsertSink:
         # costs a fraction of re-running the window compaction,
         # which used to be a second action over the whole batch
         # (and forced a persist).  The legacy-migration batch is
-        # the one exception: it must rewrite EVERY legacy bucket.
-        probe = (
-            legacy_base.withColumn("__bucket", bucket).unionByName(
-                batch_df.withColumn("__bucket", bucket),
-                allowMissingColumns=True,
-            )
-            if legacy_base is not None
-            else batch_df.withColumn("__bucket", bucket)
-        )
+        # the one exception: it must rewrite EVERY legacy bucket, so
+        # its probe runs over the legacy rows too.
         t_setup = time.time()
         # AQE off for the sink's two fixed-shape jobs: both are
         # explicitly partitioned (repartition(n_buckets) / a 2-stage
@@ -2241,34 +2195,21 @@ class SnapshotUpsertSink:
             # ≤ n_buckets values per input partition into ONE reduce
             # task (measured ~2x less probe latency per micro-batch)
             touched = sorted(
-                probe.agg(F.collect_set("__bucket")).collect()[0][0]
+                tagged.agg(F.collect_set("__bucket")).collect()[0][0]
             )
             t_probe = time.time()
-            base_paths = [
-                self._bucket_path(manifest["buckets"][str(b)], b)
-                for b in touched
-                if str(b) in manifest["buckets"]
-            ]
+            base_paths = self._bucket_paths(manifest, touched)
             stored_schema = manifest.get("schema")
             if base_paths:
                 # allowMissingColumns = schema evolution: a batch may
                 # ADD columns (old state rows read NULL there) or
                 # arrive while historical state has columns the source
                 # dropped — both union into the superset schema,
-                # Iceberg-style.  When the manifest carries the state's
-                # union schema, read with it EXPLICITLY (missing
-                # columns null-fill) instead of paying the mergeSchema
-                # footer-merge job every micro-batch.
-                if stored_schema is not None:
-                    from pyspark.sql import types as T
-
-                    reader = spark.read.schema(
-                        T.StructType.fromJson(json.loads(stored_schema))
-                    )
-                else:
-                    reader = spark.read.option("mergeSchema", "true")
-                base = reader.parquet(*base_paths).withColumn(
-                    "__bucket", bucket
+                # Iceberg-style.
+                base = (
+                    self._state_reader(spark, stored_schema)
+                    .parquet(*base_paths)
+                    .withColumn("__bucket", bucket)
                 )
                 unioned = base.unionByName(tagged, allowMissingColumns=True)
             else:
@@ -2411,23 +2352,8 @@ class SnapshotUpsertSink:
                             f"for branch {branch!r} after 64 attempts"
                         )
             snap_dir = self._snapshot_path(new_snap)
-            # data first (always a fresh directory — never one being
-            # read); static overwrite truncates any orphan files a
-            # crashed attempt left, regardless of the session's
-            # partitionOverwriteMode.  Committer algorithm v2 commits
-            # task files straight into the destination (no job-commit
-            # rename pass) — crash-orphans are already handled by the
-            # static overwrite + the manifest fence, so v1's rename
-            # ceremony buys nothing here.  Measured ~0.14 s/batch.
-            (
-                merged.write.mode("overwrite")
-                .option("partitionOverwriteMode", "static")
-                .option(
-                    "mapreduce.fileoutputcommitter.algorithm.version", "2"
-                )
-                .partitionBy("__bucket")
-                .parquet(snap_dir)
-            )
+            # data first: always a fresh directory, never one being read
+            self._write_buckets(merged, snap_dir)
         t_write = time.time()
         # … then manifest (rewritten buckets point at new_snap, all
         # others keep their byte-identical files) + pointer
@@ -2533,9 +2459,13 @@ class SnapshotUpsertSink:
         return list((manifest or {}).get("deltas") or [])
 
     def _state_reader(self, spark: SparkSession, stored_schema: str | None):
-        """Reader for committed state files: the manifest-carried union
-        schema when tracked (missing columns null-fill, no footer-merge
-        job), mergeSchema otherwise (legacy / post-type-conflict)."""
+        """THE reader for committed sink files (buckets and deltas) —
+        every state read goes through it.  With the manifest-carried
+        union schema it reads EXPLICITLY: missing columns null-fill,
+        narrower numeric files upcast (int32 and int64 buckets of one
+        widened column read together, which mergeSchema refuses), and
+        there is no footer-merge job.  mergeSchema otherwise (legacy /
+        post-type-conflict targets)."""
         if stored_schema is not None:
             from pyspark.sql import types as T
 
@@ -2543,6 +2473,25 @@ class SnapshotUpsertSink:
                 T.StructType.fromJson(json.loads(stored_schema))
             )
         return spark.read.option("mergeSchema", "true")
+
+    @staticmethod
+    def _write_buckets(df: DataFrame, snap_dir: str) -> None:
+        """THE bucketed write of every bucket rewrite (merge, rebucket,
+        tombstone GC): ``df``'s rows land under
+        ``snap_dir/__bucket=<b>``.  Static overwrite truncates any
+        orphan files a crashed attempt left, regardless of the
+        session's partitionOverwriteMode.  Committer algorithm v2
+        commits task files straight into the destination (no job-commit
+        rename pass) — crash-orphans are already handled by the static
+        overwrite + the manifest fence, so v1's rename ceremony buys
+        nothing here.  Measured ~0.14 s/batch."""
+        (
+            df.write.mode("overwrite")
+            .option("partitionOverwriteMode", "static")
+            .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
+            .partitionBy("__bucket")
+            .parquet(snap_dir)
+        )
 
     def _append_delta(
         self,
@@ -2861,8 +2810,9 @@ class SnapshotUpsertSink:
         # replay guard is preserved.
         self._claim(new_snap, None)  # writer fence
         snap_dir = self._snapshot_path(new_snap)
+        reader = self._state_reader(spark, manifest.get("schema"))
         for b in sorted(todo):
-            df = spark.read.parquet(self._bucket_path(manifest["buckets"][str(b)], b))
+            df = reader.parquet(*self._bucket_paths(manifest, [b]))
             df.coalesce(files_per_bucket).write.mode("overwrite").parquet(
                 os.path.join(snap_dir, f"__bucket={b}")
             )
@@ -2929,15 +2879,8 @@ class SnapshotUpsertSink:
         # their late-straggler protection must survive the rewrite
         state = self.current_state(spark).withColumn("__bucket", bucket)
         with _aqe_disabled(spark):
-            (
-                state.repartition(n_buckets_new, F.col("__bucket"))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "static")
-                .option(
-                    "mapreduce.fileoutputcommitter.algorithm.version", "2"
-                )
-                .partitionBy("__bucket")
-                .parquet(snap_dir)
+            self._write_buckets(
+                state.repartition(n_buckets_new, F.col("__bucket")), snap_dir
             )
         new_buckets = {
             str(b): new_snap for b in self._written_buckets(snap_dir)
@@ -3095,10 +3038,8 @@ class SnapshotUpsertSink:
         n_buckets = manifest["n_buckets"]
         bucket = self._bucket_col(n_buckets)
 
-        state = self.current_state(spark)
-        expirable = state.filter(
-            (F.col(self.op_col) == "d") & (F.col(ord_col) < F.lit(watermark))
-        )
+        expired = (F.col(self.op_col) == "d") & (F.col(ord_col) < F.lit(watermark))
+        expirable = self.current_state(spark).filter(expired)
         # count + touched-bucket set in ONE single-reduce aggregate
         # over one state scan (no persist needed for a single action)
         n_expired, touched_set = expirable.agg(
@@ -3124,24 +3065,12 @@ class SnapshotUpsertSink:
         os.makedirs(snap_dir, exist_ok=True)
         if touched:
             keep = (
-                spark.read.option("mergeSchema", "true")
-                .parquet(
-                    *[self._bucket_path(manifest["buckets"][str(b)], b) for b in touched]
-                )
-                .filter(
-                    ~(
-                        (F.col(self.op_col) == "d")
-                        & (F.col(ord_col) < F.lit(watermark))
-                    )
-                )
+                self._state_reader(spark, manifest.get("schema"))
+                .parquet(*self._bucket_paths(manifest, touched))
+                .filter(~expired)
                 .withColumn("__bucket", bucket)
             )
-            (
-                keep.write.mode("overwrite")
-                .option("partitionOverwriteMode", "static")
-                .partitionBy("__bucket")
-                .parquet(snap_dir)
-            )
+            self._write_buckets(keep, snap_dir)
             written = self._written_buckets(snap_dir)
             for b in touched:
                 if b in written:

@@ -18,10 +18,29 @@ def test_prepare_artifacts_reports_each_build(spark, sf_dir):
 
 
 def test_prepare_artifacts_idempotent_and_cheap_second_call(spark, sf_dir):
+    """The first call fills every per-process cache for ``sf_dir`` —
+    including one centroid block per declared IVF fit — and the second
+    call is all cache hits: every entry stays the identical object."""
+    from lakehouse_cdc_spark.llm.similarity import auto_k
+    from lakehouse_cdc_spark.plans import er_queries, llm_queries
+
+    caches = [
+        llm_queries._EMB_COUNT_CACHE,
+        llm_queries._FIT_BLOCK_CACHE,
+        llm_queries._OLD_INDEX_CACHE,
+        er_queries._ROWCOUNT_CACHE,
+    ]
     prepare_artifacts(spark, sf_dir)
-    t2 = prepare_artifacts(spark, sf_dir)
-    # second call must find every per-process cache hot (no rebuild)
-    assert sum(t2.values()) < 1.0
+    n = llm_queries._EMB_COUNT_CACHE[sf_dir]
+    assert sf_dir in llm_queries._OLD_INDEX_CACHE
+    assert sf_dir in er_queries._ROWCOUNT_CACHE
+    for min_k, _ in llm_queries.IVF_FITS.values():
+        assert (sf_dir, auto_k(n, 64, min_k=min_k)) in llm_queries._FIT_BLOCK_CACHE
+    before = [dict(c) for c in caches]
+    prepare_artifacts(spark, sf_dir)
+    for cache, snap in zip(caches, before):
+        assert cache.keys() == snap.keys()
+        assert all(cache[k] is v for k, v in snap.items())
 
 
 def test_shard_query_has_no_result_memo(spark, sf_dir):

@@ -297,6 +297,19 @@ def test_registry_head_is_the_family_showcase():
     assert all(REGISTRY[n].oracle for n in head)
 
 
+def test_register_refuses_a_duplicate_name():
+    """A second ``@register`` of a taken name used to replace the first
+    query silently (the module imported last won); it must raise, and
+    leave the registered query in place."""
+    from lakehouse_cdc_spark.plans.registry import register
+
+    spec = REGISTRY["emb_hard_negative_mining"]
+    with pytest.raises(ValueError, match="already registered"):
+        register("emb_hard_negative_mining")(lambda spark, sf_dir: None)
+    assert REGISTRY["emb_hard_negative_mining"] is spec
+    assert len(REGISTRY) == 365
+
+
 def test_runtime_sized_sides_get_aqe_broadcast_at_small_scale(spark, sf_dir):
     """operators/hints.py's contract, proven empirically: a
     vocabulary-sized side marked runtime_sized (NO forced hint) is

@@ -1149,30 +1149,72 @@ def test_sink_schema_widening_int_to_bigint(spark, tmp_path):
     """A later batch whose column widened (int -> bigint) must merge:
     Spark's set-operation type coercion widens the union, and the
     committed state carries the wider type without corrupting old
-    rows."""
-    from lakehouse_cdc_spark.streaming import SnapshotUpsertSink
+    rows.  Every read path must then span int32 and int64 bucket files
+    of the one column: lookup, time travel to before the widening, the
+    change feed across it, and tombstone GC over one int32 and one
+    int64 bucket (Spark's mergeSchema refuses that pair outright)."""
+    from pyspark.sql import types as T
 
     sink = SnapshotUpsertSink(
-        str(tmp_path / "t"), keys=["id"], order_by=["seq"], n_buckets=2
+        str(tmp_path / "t"), keys=["id"], order_by=["seq"], n_buckets=4
     )
-    sink.process_batch(
-        spark.createDataFrame(
-            [(1, 100, "c", 0), (2, 200, "c", 0)],
-            "id int, v int, operation string, seq int",
-        ),
-        0,
+    ids = spark.range(40).select(
+        F.col("id").cast("int").alias("id"),
+        F.pmod(F.hash(F.col("id").cast("int")), F.lit(4)).alias("b"),
     )
+    by_bucket: dict[int, list[int]] = {}
+    for r in ids.collect():
+        by_bucket.setdefault(r.b, []).append(r.id)
+    narrow_b, wide_b = sorted(b for b in by_bucket if len(by_bucket[b]) >= 2)[:2]
+    gone32 = by_bucket[narrow_b][0]  # tombstone in the int32 bucket
+    gone64, grown = by_bucket[wide_b][:2]  # tombstone + widened value
+
+    def batch(rows, v_type):
+        return spark.createDataFrame(
+            rows, f"id int, v {v_type}, operation string, seq int"
+        )
+
+    sink.process_batch(batch([(i, 10 * i, "c", 0) for i in range(40)], "int"), 0)
+    sink.process_batch(batch([(gone32, None, "d", 1)], "int"), 1)
+    pre_widening = sink.committed_snapshot()
     big = 5_000_000_000  # does not fit int32
     sink.process_batch(
-        spark.createDataFrame(
-            [(2, big, "u", 1), (3, big + 1, "c", 1)],
-            "id int, v long, operation string, seq int",
-        ),
-        1,
+        batch([(grown, big, "u", 2), (gone64, None, "d", 2)], "long"), 2
     )
+    buckets = sink._read_manifest(sink.committed_snapshot())["buckets"]
+    widths = {
+        b: spark.read.parquet(sink._bucket_path(buckets[str(b)], b))
+        .schema["v"]
+        .dataType
+        for b in (narrow_b, wide_b)
+    }
+    assert widths == {narrow_b: T.IntegerType(), wide_b: T.LongType()}
+
+    want = {i: 10 * i for i in range(40) if i not in (gone32, gone64)}
+    want[grown] = big
     state = {r.id: r.v for r in sink.current_table(spark).collect()}
-    assert state == {1: 100, 2: big, 3: big + 1}
+    assert state == want
     assert dict(sink.current_table(spark).dtypes)["v"] == "bigint"
+    # lookup reads every bucket (no blooms): int32 and int64 files at once
+    assert [r.v for r in sink.lookup(spark, "id", grown).collect()] == [big]
+    assert sink.lookup(spark, "id", gone32).collect() == []
+    assert {r.id: r.v for r in sink.lookup_range(spark, "id", 0, 39).collect()} == want
+    # time travel to before the widening reads the int-typed state
+    old = sink.state_at(spark, pre_widening)
+    assert dict(old.dtypes)["v"] == "int"
+    assert {(r.id, r.v, r.operation) for r in old.collect()} == {
+        (i, None, "d") if i == gone32 else (i, 10 * i, "c") for i in range(40)
+    }
+    # the change feed across the widening: each commit's own changes
+    feed = sink.changes_between(spark, 0, sink.committed_snapshot())
+    assert sorted(
+        (r._change_snapshot, r.id, r.v, r.operation) for r in feed.collect()
+    ) == [(1, gone32, None, "d")] + sorted(
+        [(2, grown, big, "u"), (2, gone64, None, "d")]
+    )
+    # GC expires both tombstones, one per bucket width
+    assert sink.gc_tombstones(spark, 10) == 2
+    assert {r.id: r.v for r in sink.current_state(spark).collect()} == want
 
 
 def test_sink_zone_maps_prune_range_lookups(spark, tmp_path):
