@@ -45,7 +45,13 @@ from lakehouse_cdc_spark.llm.text import (
     token_count,
     tokens,
 )
-from lakehouse_cdc_spark.plans.registry import davg, register, sql_davg, table
+from lakehouse_cdc_spark.plans.registry import (
+    davg,
+    footer_schema,
+    register,
+    sql_davg,
+    table,
+)
 
 #: shared shingle CTE (3-word shingles, distinct per doc) — the DuckDB
 #: mirror of llm/dedup.py:shingle_table
@@ -3096,7 +3102,7 @@ def _old_shard_band_index(spark, sf_dir):
         path = tempfile.mkdtemp(prefix="lsh_old_index_")
         idx.write.mode("overwrite").parquet(path)
         _OLD_INDEX_CACHE[sf_dir] = path
-    return spark.read.parquet(path)
+    return spark.read.schema(footer_schema(path)).parquet(path)
 
 
 @register(

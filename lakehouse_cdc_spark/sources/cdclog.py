@@ -796,13 +796,14 @@ def read_committed_log(spark, path: str, prune=None):
         files = _prune_pairs(pairs, prune)
         if not files:
             # everything skipped: an EMPTY frame with the log's schema
-            # (one footer read), not None — the table exists; the
-            # schema file comes from the SAME manifest pass, so a
-            # concurrent overwrite can't have unlinked it out from
-            # under a stale earlier listing
-            return spark.read.parquet(
-                os.path.join(path, pairs[0][0])
-            ).limit(0)
+            # (one footer read on the driver, no Spark job), not None —
+            # the table exists; the schema file comes from the SAME
+            # manifest pass, so a concurrent overwrite can't have
+            # unlinked it out from under a stale earlier listing
+            from lakehouse_cdc_spark.plans.registry import footer_schema
+
+            first = os.path.join(path, pairs[0][0])
+            return spark.read.schema(footer_schema(first)).parquet(first).limit(0)
     return spark.read.parquet(*[os.path.join(path, f) for f in files])
 
 

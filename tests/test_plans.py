@@ -1,12 +1,21 @@
 """Plan-quality regression tests: the physical-plan properties SCALE.md
 claims must keep holding — pushdown reaching the scan, dimensions
-broadcast, window pre-compaction, no accidental cartesian products."""
+broadcast, window pre-compaction, no accidental cartesian products —
+and scan setup (``registry.table``) that runs no Spark job."""
 
 from __future__ import annotations
 
+import os
+import uuid
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
+from pyspark.sql.types import LongType, TimestampType
 
 from lakehouse_cdc_spark.plans import REGISTRY
+from lakehouse_cdc_spark.plans.registry import footer_schema, table
+from lakehouse_cdc_spark.session import TABLES
 
 #: queries that intentionally contain a broadcast cross join
 #: (1-row aggregate or tiny query-vector block)
@@ -320,3 +329,104 @@ def test_runtime_sized_sides_get_aqe_broadcast_at_small_scale(spark, sf_dir):
     df.collect()  # AQE finalizes join strategies during execution
     final = df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in final, final[:2000]
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_footer_schema_equals_spark_inference_on_testdata(spark, sf_dir, sf):
+    """``table()`` reads with ``footer_schema`` instead of letting Spark
+    infer; for every test-data table it must be the schema Spark infers."""
+    for name in TABLES:
+        path = os.path.join(os.path.dirname(sf_dir), sf, f"{name}.parquet")
+        assert footer_schema(path) == spark.read.parquet(path).schema, path
+
+
+def test_footer_schema_equals_spark_inference_on_pyarrow_files(spark, tmp_path):
+    """Files without Spark's row-schema footer key: a generated-input
+    ``events`` with ``ns`` ``ts`` (written as ``perfbench/datagen.py``
+    writes it; the engine reads ns as bigint), INT96 (pyarrow reports
+    it as ``timestamp[ns]``), and the other arrow types Spark maps."""
+    us = 1_704_067_200_000_001  # 2024-01-01 00:00:00.000001 UTC
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": [0],
+                "ts": pa.array([us * 1000 + 999], type=pa.timestamp("ns")),
+                "event_type": ["view"],
+            }
+        ),
+        tmp_path / "events.parquet",
+    )
+    pq.write_table(
+        pa.table({"t": pa.array([0], pa.timestamp("ns"))}),
+        tmp_path / "int96.parquet",
+        use_deprecated_int96_timestamps=True,
+    )
+    misc = pa.schema(
+        [
+            ("i8", pa.int8()),
+            ("i16", pa.int16()),
+            ("d", pa.date32()),
+            ("dec", pa.decimal128(10, 2)),
+            ("tz", pa.timestamp("us", tz="UTC")),
+            ("ms", pa.timestamp("ms")),
+            ("b", pa.binary()),
+            ("l", pa.list_(pa.int64())),
+            ("cat", pa.dictionary(pa.int32(), pa.string())),
+            pa.field("req", pa.int64(), nullable=False),
+        ]
+    )
+    pq.write_table(
+        pa.Table.from_pylist([{"req": 1}], schema=misc), tmp_path / "misc.parquet"
+    )
+    inferred = {
+        name: spark.read.parquet(str(tmp_path / f"{name}.parquet")).schema
+        for name in ("events", "int96", "misc")
+    }
+    assert inferred["events"]["ts"].dataType == LongType()
+    assert inferred["int96"]["t"].dataType == TimestampType()
+    for name, schema in inferred.items():
+        assert footer_schema(str(tmp_path / f"{name}.parquet")) == schema, name
+    # table() rebuilds the ns ts at µs precision, not 1000x off
+    ts = table(spark, str(tmp_path), "events").selectExpr("unix_micros(ts) AS us")
+    assert ts.first().us == us
+
+
+def test_footer_schema_equals_spark_inference_on_spark_written_dir(spark, tmp_path):
+    """A Spark-written multi-part directory, timestamps as INT96."""
+    path = str(tmp_path / "spark_dir")
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
+    try:
+        spark.sql(
+            """SELECT CAST(id AS TIMESTAMP) AS ts,
+                      CAST(CAST(id AS TIMESTAMP) AS TIMESTAMP_NTZ) AS ntz,
+                      DATE'2020-01-01' + CAST(id AS INT) AS dt,
+                      CAST(id AS DECIMAL(12, 3)) AS dec,
+                      array(id, id) AS arr,
+                      map('k', id) AS m,
+                      named_struct('a', id, 'b', CAST(id AS STRING)) AS st,
+                      CAST(CAST(id AS STRING) AS BINARY) AS bin,
+                      CAST(id AS TINYINT) AS by,
+                      CAST(id AS SMALLINT) AS sh,
+                      id
+               FROM range(30)"""
+        ).repartition(3).write.parquet(path)
+    finally:
+        spark.conf.unset("spark.sql.parquet.outputTimestampType")
+    assert len([f for f in os.listdir(path) if f.startswith("part-")]) == 3
+    assert footer_schema(path) == spark.read.parquet(path).schema
+
+
+def test_table_runs_no_spark_job(spark, sf_dir):
+    """Building a scan must not run a Spark job: a bare
+    ``spark.read.parquet(path)`` runs one to infer the schema on every
+    call, which is the per-query cost ``footer_schema`` removes."""
+    sc = spark.sparkContext
+    group = f"table-no-job-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "table() scan setup")
+    try:
+        for name in TABLES:
+            table(spark, os.path.join(os.path.dirname(sf_dir), "sf0.01"), name)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []

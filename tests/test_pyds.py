@@ -420,7 +420,7 @@ def test_zone_map_pruning_skips_files_and_loses_nothing(spark, tmp_path):
     # fully-pruned range: empty frame, correct schema, table not None
     nothing = read_committed_log(spark, d, prune=[("offset", 900, 950)])
     assert nothing.count() == 0
-    assert nothing.columns == full.columns
+    assert nothing.schema == full.schema
 
     # a file with no stats is NEVER skipped (pre-zone-map manifests)
     import json
